@@ -54,8 +54,8 @@ import org.apache.spark.sql.SparkSession
   * from the plan-keyed CacheManager entries of run 1 (the r15 verdict's
   * gaming finding: q_ppjoin's 3-run median reflected cross-run cache
   * reuse, not the optimization). Numbers before/after this change are
-  * NOT comparable for persist-bearing ops; OPTIMIZATION_r16.md restates
-  * the r15 claims against the cold bench.
+  * NOT comparable for persist-bearing ops: the figures in
+  * OPTIMIZATION_r15.md are warm medians and have not been restated cold.
   */
 object Bench {
   /** Fixed-work single-thread calibration: ~0.3 s on a healthy core.

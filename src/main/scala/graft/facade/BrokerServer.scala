@@ -1167,8 +1167,16 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
               // one produce call: combined row count advances the expected
               // sequence to base+n, identical to per-batch appends of a
               // contiguous run (and what recoverProducerSeqs rebuilds)
-              storage.produce(tp, df, pid, epoch.toInt,
-                batches.head.baseSequence) match {
+              // decode and validation failures answer INVALID_RECORD
+              // (below). Storage answers KAFKA_STORAGE_ERROR itself when
+              // nothing was stored; an exception leaves that unknown, so
+              // it answers UNKNOWN_SERVER_ERROR, which clients do not
+              // retry (a retry could append the batch twice)
+              val stored =
+                try storage.produce(tp, df, pid, epoch.toInt,
+                  batches.head.baseSequence)
+                catch { case NonFatal(_) => Left(ErrorCode.UnknownServerError) }
+              stored match {
                 case Right(base) =>
                   noteProducedPartition(t.topic, p.partition)
                   (p.partition, 0.toShort, base, storage.offsetStage(tp).logStart)
@@ -1236,10 +1244,12 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
           fetched.filter(!inAborted)
         case _ => fetched
       }
+    // storage returns the rows in offset order as a local relation, so
+    // this collect runs no Spark job
     val rows = visible
       .select(col("offset"), col("timestamp"), col("key").cast("binary"),
         col("value").cast("binary"))
-      .orderBy("offset").collect()
+      .collect()
     if (rows.isEmpty) Array.empty[Byte]
     else {
       val base = rows.head.getLong(0)
@@ -1350,8 +1360,19 @@ final class BrokerServer(storage: Storage, host: String = "127.0.0.1",
     // (the first partition may overshoot by one batch, as in Kafka)
     var budget = math.max(req.maxBytes.toLong, 1L)
 
+    // a storage failure answers its partition with KAFKA_STORAGE_ERROR;
+    // the rest of the response and the connection carry on
     def partResult(tp: Topition, fetchOffset: Long,
-                   maxBytes: Int): WireProtocol.FetchV12PartResult = {
+                   maxBytes: Int): WireProtocol.FetchV12PartResult =
+      try readPart(tp, fetchOffset, maxBytes)
+      catch { case NonFatal(_) =>
+        WireProtocol.FetchV12PartResult(tp.partition,
+          ErrorCode.KafkaStorageError.toShort, -1L, -1L, -1L, Nil,
+          Array.empty[Byte])
+      }
+
+    def readPart(tp: Topition, fetchOffset: Long,
+                 maxBytes: Int): WireProtocol.FetchV12PartResult = {
       val stage = storage.offsetStage(tp)
       val records =
         if (budget <= 0) Array.empty[Byte]

@@ -128,6 +128,8 @@ object Model {
     val OffsetOutOfRange = 1
     val MessageTooLarge = 10
     val InvalidRecord = 87
+    val KafkaStorageError = 56
+    val UnknownServerError = -1
     val ProducerFenced = 90
     val OutOfOrderSequenceNumber = 45
     val DuplicateSequenceNumber = 46

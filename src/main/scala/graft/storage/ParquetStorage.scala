@@ -1,10 +1,17 @@
 package graft.storage
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentSkipListSet
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.Model._
 import graft.operators.LogOps
 import graft.schema.SchemaRegistry
@@ -20,13 +27,18 @@ import graft.lake.{Lake, TxLog}
   *    atomic rename (the OptiCon conditional-PUT analog,
   *    `dynostore/opticon.rs:232-320`) — offsets are assigned exactly once
   *    even with concurrent producers
+  *  - fetch lists the batch objects by name, starts at the one with the
+  *    greatest base at or below the fetch offset, and reads them in
+  *    offset order on the calling thread until the byte budget is
+  *    covered (the early-exit loop of `dynostore.rs:1091-1139`): its
+  *    cost follows the bytes it returns, not the partition's age, and it
+  *    runs no Spark job
   *  - schema-backed topics are additionally materialized to
   *    `lake/<topic>/` with meta columns, generated columns, and partition
   *    dirs (reference `dynostore.rs:805-822`)
   *
   * On a real cluster the same layout runs against S3/HDFS paths and the
-  * watermark CAS becomes a Delta/Iceberg commit; file-per-batch keeps
-  * offset-range fetches prunable by filename without reading data.
+  * watermark CAS becomes a Delta/Iceberg commit.
   */
 final class ParquetStorage(spark: SparkSession, root: String,
                            registry: Option[SchemaRegistry] = None,
@@ -67,13 +79,11 @@ final class ParquetStorage(spark: SparkSession, root: String,
     * to 'Too many open files'. Same for the recursive walk.
     */
   private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
     val s = Files.list(dir)
     try s.iterator().asScala.toList finally s.close()
   }
 
   private def walkAll(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
     val s = Files.walk(p)
     try s.iterator().asScala.toList finally s.close()
   }
@@ -147,14 +157,12 @@ final class ParquetStorage(spark: SparkSession, root: String,
       val loaded: Option[(Int, Map[String, String])] =
         if (Files.exists(metaFile)) {
           try {
-            import scala.jdk.CollectionConverters._
             val node = jsonMapper.readTree(Files.readString(metaFile))
             val cfg = node.path("config").properties().asScala
               .map(e => e.getKey -> e.getValue.asText()).toMap
             Some((node.path("partitions").asInt(1), cfg))
           } catch { case scala.util.control.NonFatal(_) => None }
         } else if (Files.isDirectory(dir)) {
-          import scala.jdk.CollectionConverters._
           val n = listDir(dir).count(Files.isDirectory(_))
           if (n > 0) Some((n, Map.empty[String, String])) else None
         } else None
@@ -188,7 +196,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
     val logRoot = Paths.get(s"$root/log")
     val onDisk =
       if (Files.isDirectory(logRoot)) {
-        import scala.jdk.CollectionConverters._
         listDir(logRoot).iterator.filter(Files.isDirectory(_))
           .map(_.getFileName.toString).toSeq
       } else Nil
@@ -219,17 +226,57 @@ final class ParquetStorage(spark: SparkSession, root: String,
     */
   private val watermarkLocks = TrieMap.empty[Topition, Object]
 
+  /** Bases reserved but not yet renamed into place, per partition. The
+    * watermark runs ahead of the published files while a batch is being
+    * written: with A holding 10 and B holding 11, B's file can land
+    * first. Fetch ends at the lowest base here, so it never returns 11
+    * while 10 is missing (the consumer would skip 10 for good), and
+    * maintenance rewrites only the files below it, so batch ranges stay
+    * disjoint and ordered by base. A base is added under the watermark
+    * lock BEFORE the watermark moves: a reader that sees the new
+    * watermark sees the base too. [[withReserved]] removes it after the
+    * rename or on failure.
+    */
+  private val unpublished =
+    TrieMap.empty[Topition, ConcurrentSkipListSet[java.lang.Long]]
+
   private def reserveOffsets(tp: Topition, n: Long): Long =
     watermarkLocks.getOrElseUpdate(tp, new Object).synchronized {
       val wm = watermarks.getOrElseUpdate(tp, new AtomicLong(readWatermarkFile(tp)))
-      val base = wm.getAndAdd(n)
+      val base = wm.get()
       val p = Paths.get(partDir(tp), "watermark.json")
       val tmp = Paths.get(partDir(tp), s"watermark.json.tmp${base}")
       Files.writeString(tmp, s"""{"high":${base + n}}""")
       Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
+      if (n > 0)
+        unpublished.getOrElseUpdate(tp, new ConcurrentSkipListSet).add(base)
+      wm.set(base + n)
       base
     }
+
+  /** Reserves offsets for each (partition, count) in turn and runs
+    * `write` with their bases; every base is released once `write` has
+    * renamed its batches into place or has failed.
+    */
+  private def withReserved[A](counts: Seq[(Topition, Long)])(
+      write: Seq[Long] => A): A = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[(Topition, Long)]
+    try {
+      counts.foreach { case (tp, n) => held += tp -> reserveOffsets(tp, n) }
+      write(held.map(_._2).toSeq)
+    } finally held.foreach { case (tp, base) =>
+      unpublished.get(tp).foreach(_.remove(base))
+    }
+  }
+
+  /** End of the published prefix: every offset below it lies in a batch
+    * file that is in place. Read the watermark first, then the
+    * reservations, as fetch does.
+    */
+  private def publishedEnd(tp: Topition, high: Long): Long =
+    unpublished.get(tp).flatMap(s => Option(s.ceiling(Long.MinValue)))
+      .map(b => math.min(high, b.longValue)).getOrElse(high)
 
   private def readWatermarkFile(tp: Topition): Long = {
     val p = Paths.get(partDir(tp), "watermark.json")
@@ -303,57 +350,65 @@ final class ParquetStorage(spark: SparkSession, root: String,
     if (stats.map(_.getAs[Long]("__bad")).sum > 0)
       return Left(ErrorCode.InvalidRecord)
     val n = stats.map(_.getAs[Long]("__cnt")).sum
-    val base = reserveOffsets(tp, n)
-    if (n == 0) return Right(base)
+    if (n == 0) return Right(reserveOffsets(tp, n))
 
-    // offsets are pure map-side arithmetic: cumulative start per input
-    // partition (a tiny driver-built literal map) plus the row index
-    // within the partition (low 33 bits of monotonically_increasing_id).
-    // Requires `batch` to re-evaluate deterministically between the stats
-    // job and this one — true for scans and local relations; callers with
-    // non-deterministic inputs should cache() first.
-    val byPid = stats.sortBy(_.getAs[Int]("__pid"))
-    val cums = byPid.scanLeft(base) { (acc, r) => acc + r.getAs[Long]("__cnt") }
-    val pidBase = map(byPid.zip(cums).flatMap { case (r, b) =>
-      Seq(lit(r.getAs[Int]("__pid")), lit(b)) }.toSeq: _*)
-    val withOffsets = batch
-      // the log's record model is BINARY key/value (logSchema): string
-      // producers (CLI/json) coerce to their UTF-8 bytes here, binary
-      // producers (the wire facade) pass through byte-exact — a payload
-      // must never round-trip through a String (invalid UTF-8 sequences
-      // would be replaced, corrupting Avro/proto values)
-      .withColumn("key", col("key").cast("binary"))
-      .withColumn("value", col("value").cast("binary"))
-      .withColumn("offset",
-        element_at(pidBase, spark_partition_id()) +
-          monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-      .withColumn("topic", lit(tp.topic))
-      .withColumn("partition", lit(tp.partition))
-      .withColumn("producer_id", lit(producerId))
-      .withColumn("producer_epoch", lit(producerEpoch))
-      .withColumn("base_sequence", lit(baseSequence))
-      .withColumn("is_control", lit(false))
-      .withColumn("control_type", lit(null).cast("string"))
+    // a failure up to the rename leaves nothing in the log: answered as
+    // KAFKA_STORAGE_ERROR, which a client may retry. Later failures throw,
+    // as the batch is already in place.
+    val (base, withOffsets) = try withReserved(Seq(tp -> n)) { bases =>
+      val base = bases.head
+      // offsets are pure map-side arithmetic: cumulative start per input
+      // partition (a tiny driver-built literal map) plus the row index
+      // within the partition (low 33 bits of monotonically_increasing_id).
+      // Requires `batch` to re-evaluate deterministically between the stats
+      // job and this one — true for scans and local relations; callers with
+      // non-deterministic inputs should cache() first.
+      val byPid = stats.sortBy(_.getAs[Int]("__pid"))
+      val cums = byPid.scanLeft(base) { (acc, r) => acc + r.getAs[Long]("__cnt") }
+      val pidBase = map(byPid.zip(cums).flatMap { case (r, b) =>
+        Seq(lit(r.getAs[Int]("__pid")), lit(b)) }.toSeq: _*)
+      val withOffsets = batch
+        // the log's record model is BINARY key/value (logSchema): string
+        // producers (CLI/json) coerce to their UTF-8 bytes here, binary
+        // producers (the wire facade) pass through byte-exact — a payload
+        // must never round-trip through a String (invalid UTF-8 sequences
+        // would be replaced, corrupting Avro/proto values)
+        .withColumn("key", col("key").cast("binary"))
+        .withColumn("value", col("value").cast("binary"))
+        .withColumn("offset",
+          element_at(pidBase, spark_partition_id()) +
+            monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
+        .withColumn("topic", lit(tp.topic))
+        .withColumn("partition", lit(tp.partition))
+        .withColumn("producer_id", lit(producerId))
+        .withColumn("producer_epoch", lit(producerEpoch))
+        .withColumn("base_sequence", lit(baseSequence))
+        .withColumn("is_control", lit(false))
+        .withColumn("control_type", lit(null).cast("string"))
 
-    // lake-ONLY topic (`lake.sink=true`, schema-backed): records land
-    // in the typed lake table and never as log objects — the analytics
-    // ingestion mode where nothing consumes the topic as a stream.
-    // Offsets still reserve durably (watermark.json is independent of
-    // batch files), so restart recovery never reuses an offset; fetch
-    // sees an empty log by design.
-    val lakeOnly = schema.nonEmpty &&
-      topicConfig(tp.topic).get(ConfigKey.LakeSink)
-        .exists(_.equalsIgnoreCase("true"))
+      // lake-ONLY topic (`lake.sink=true`, schema-backed): records land
+      // in the typed lake table and never as log objects — the analytics
+      // ingestion mode where nothing consumes the topic as a stream.
+      // Offsets still reserve durably (watermark.json is independent of
+      // batch files), so restart recovery never reuses an offset; fetch
+      // sees an empty log by design.
+      val lakeOnly = schema.nonEmpty &&
+        topicConfig(tp.topic).get(ConfigKey.LakeSink)
+          .exists(_.equalsIgnoreCase("true"))
 
-    // write to a temp dir, then atomic-rename to publish — readers never
-    // see a half-written batch (the PutMode::Create analog,
-    // dynostore.rs:992-1014)
-    if (!lakeOnly) {
-      val tmpDir = f"${partDir(tp)}/.tmp_$base%020d"
-      withOffsets.coalesce(1).write.mode("overwrite").parquet(tmpDir)
-      Files.move(Paths.get(tmpDir),
-        Paths.get(f"${partDir(tp)}/$base%020d.parquet"),
-        StandardCopyOption.ATOMIC_MOVE)
+      // write to a temp dir, then atomic-rename to publish — readers never
+      // see a half-written batch (the PutMode::Create analog,
+      // dynostore.rs:992-1014)
+      if (!lakeOnly) {
+        val tmpDir = f"${partDir(tp)}/.tmp_$base%020d"
+        withOffsets.coalesce(1).write.mode("overwrite").parquet(tmpDir)
+        Files.move(Paths.get(tmpDir),
+          Paths.get(f"${partDir(tp)}/$base%020d.parquet"),
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+      (base, withOffsets)
+    } catch { case scala.util.control.NonFatal(_) =>
+      return Left(ErrorCode.KafkaStorageError)
     }
 
     // track open-txn range for read_committed (reference txn_produce_offset)
@@ -528,85 +583,184 @@ final class ParquetStorage(spark: SparkSession, root: String,
     if (counts.keys.exists(p => p < 0 || p >= declared))
       return Left(ErrorCode.UnknownTopicOrPartition)
     if (counts.isEmpty) return Right(Map.empty)
-    val bases = counts.map { case (p, n) =>
-      p -> reserveOffsets(Topition(topic, p), n)
+    val parts = counts.toSeq
+    val (bases, withOffsets) = withReserved(parts.map { case (p, n) =>
+        Topition(topic, p) -> n }) { reserved =>
+      val bases = parts.map(_._1).zip(reserved)
+      val baseMap = map(bases.flatMap { case (p, b) => Seq(lit(p), lit(b)) }: _*)
+      // offset = partition base + rank within the partition; the rank's
+      // window shuffle is the same exchange the partitioned write needs
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("partition")).orderBy(monotonically_increasing_id())
+      val withOffsets = batch
+        .withColumn("key", col("key").cast("binary"))   // binary record model
+        .withColumn("value", col("value").cast("binary")) // (see produce())
+        .withColumn("offset",
+          element_at(baseMap, col("partition")) + row_number().over(w) - 1)
+        .withColumn("topic", lit(topic))
+        .withColumn("producer_id", lit(-1L))
+        .withColumn("producer_epoch", lit(-1))
+        .withColumn("base_sequence", lit(-1))
+        .withColumn("is_control", lit(false))
+        .withColumn("control_type", lit(null).cast("string"))
+      val tmpRoot = Paths.get(
+        s"$root/.produce/$topic-${java.util.UUID.randomUUID()}")
+      withOffsets.withColumn("__p", col("partition"))
+        .write.partitionBy("__p").mode("overwrite").parquet(tmpRoot.toString)
+      bases.foreach { case (p, base) =>
+        Files.move(tmpRoot.resolve(s"__p=$p"),
+          Paths.get(partDir(Topition(topic, p)), f"$base%020d.parquet"))
+      }
+      deleteRecursive(tmpRoot)
+      (bases.toMap, withOffsets)
     }
-    val baseMap = map(bases.toSeq.flatMap { case (p, b) =>
-      Seq(lit(p), lit(b)) }: _*)
-    // offset = partition base + rank within the partition; the rank's
-    // window shuffle is the same exchange the partitioned write needs
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("partition")).orderBy(monotonically_increasing_id())
-    val withOffsets = batch
-      .withColumn("key", col("key").cast("binary"))   // binary record model
-      .withColumn("value", col("value").cast("binary")) // (see produce())
-      .withColumn("offset",
-        element_at(baseMap, col("partition")) + row_number().over(w) - 1)
-      .withColumn("topic", lit(topic))
-      .withColumn("producer_id", lit(-1L))
-      .withColumn("producer_epoch", lit(-1))
-      .withColumn("base_sequence", lit(-1))
-      .withColumn("is_control", lit(false))
-      .withColumn("control_type", lit(null).cast("string"))
-    val tmpRoot = Paths.get(
-      s"$root/.produce/$topic-${java.util.UUID.randomUUID()}")
-    withOffsets.withColumn("__p", col("partition"))
-      .write.partitionBy("__p").mode("overwrite").parquet(tmpRoot.toString)
-    bases.foreach { case (p, base) =>
-      Files.move(tmpRoot.resolve(s"__p=$p"),
-        Paths.get(partDir(Topition(topic, p)), f"$base%020d.parquet"))
-    }
-    deleteRecursive(tmpRoot)
     schema.foreach(lakeSink(topic, _, withOffsets, counts.values.sum))
     Right(bases)
   }
 
   // ------------------------------------------------------------------ fetch
 
+  /** The whole partition as one lazy Spark scan, for the whole-log
+    * lookups (offset by timestamp, recovery of sequences and aborted
+    * ranges). Fetch does not use it.
+    */
   private def logDf(tp: Topition): DataFrame = {
     ensureSwapRecovered(tp) // finish any interrupted maintenance swap first
-    val dir = partDir(tp)
-    import scala.jdk.CollectionConverters._
-    val files = listDir(Paths.get(dir)).iterator
-      .filter(p => p.toString.endsWith(".parquet") &&
-        !p.getFileName.toString.startsWith("."))
-      .map(_.toString).toSeq
+    val files = batchFiles(tp).map(_.toString)
     if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         graft.model.Model.logSchema)
     else
-      // a lazily-executed fetch plan can outlive a concurrent
-      // maintenance swap that replaced these files; read-missing-as-
-      // empty turns that race into a transient short read the consumer
-      // retries (offsets only advance on delivery), never a dead job
+      // the scan runs after this listing, so a concurrent maintenance
+      // swap or deleteRecords can remove a listed file first; read it as
+      // empty rather than fail the job
       spark.read.option("ignoreMissingFiles", "true").parquet(files: _*)
   }
 
+  /** What fetch returns: the log schema with every column nullable, as a
+    * batch file that lacks a column reads it as null.
+    */
+  private val fetchSchema =
+    StructType(logSchema.fields.map(_.copy(nullable = true)))
+  // the columns read from a batch file; topic and partition come from
+  // the request
+  private val batchSchema = StructType(fetchSchema.fields.drop(2))
+  private val offsetCol = batchSchema.fieldIndex("offset")
+  private val keyCol = batchSchema.fieldIndex("key")
+  private val valueCol = batchSchema.fieldIndex("value")
+  private val controlCol = batchSchema.fieldIndex("is_control")
+
+  /** Spark's own Parquet reader (INT96 timestamps, rebase modes, absent
+    * columns: the same decoding as spark.read), run on the calling
+    * thread. `filters` only skip row groups and pages; rows they keep
+    * still need checking. Building a reader broadcasts the Hadoop conf,
+    * so the unfiltered one is built once.
+    */
+  private def parquetReader(filters: Seq[org.apache.spark.sql.sources.Filter])
+      : PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, batchSchema,
+      new StructType(), batchSchema, filters,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration))
+  private lazy val wholeFiles = parquetReader(Nil)
+  private lazy val toRow = CatalystTypeConverters.createToScalaConverter(batchSchema)
+
+  /** Runs `use` over one batch object's rows in offset order, decoded as
+    * `use` pulls them; false when the object has vanished since the
+    * listing. Every writer leaves each part file in offset order; a batch
+    * directory with no part file is one being deleted.
+    */
+  private def readBatch(batch: java.nio.file.Path,
+                        read: PartitionedFile => Iterator[InternalRow])(
+                        use: Iterator[Row] => Unit): Boolean = {
+    val opened = scala.collection.mutable.ArrayBuffer.empty[Iterator[InternalRow]]
+    try {
+      val parts = listDir(batch).filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }
+      parts.nonEmpty && {
+        // every part is open before any row is used: one deleted from
+        // here on stays readable through its open handle
+        parts.foreach { p =>
+          val len = Files.size(p)
+          opened += read(PartitionedFile(InternalRow.empty,
+            SparkPath.fromPath(new org.apache.hadoop.fs.Path(p.toUri)), 0, len,
+            Array.empty[String], 0L, len))
+        }
+        // convert as we go: the reader reuses its row buffer
+        val heads = opened.map(_.map(r => toRow(r).asInstanceOf[Row]).buffered)
+        use(Iterator.continually(heads.filter(_.hasNext)).takeWhile(_.nonEmpty)
+          .map(_.minBy(_.head.getLong(offsetCol)).next()))
+        true
+      }
+    } catch { case e: Exception if vanished(e) => false }
+    finally opened.foreach { case c: java.io.Closeable => c.close(); case _ => }
+  }
+
+  private def vanished(e: Throwable): Boolean = e match {
+    case null => false
+    case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => true
+    case _ => vanished(e.getCause)
+  }
+
+  /** Reads only the batch files the offset range and byte budget need,
+    * on the calling thread: from the file with the greatest base at or
+    * below max(fetchOffset, logStart), in offset order, keeping a data
+    * row while the bytes kept before it are under maxBytes (so the first
+    * row always comes back, KIP-74), where a row costs key + value + 16
+    * bytes (tombstones too). It stops at the first row that rule drops,
+    * at the visibility end, or when the files run out, and opens no file
+    * past that point. A fetch that starts inside a file skips the file's
+    * row groups below the start, and rows are decoded as they are used,
+    * so a large maintained segment costs the part of it that is read,
+    * not its size. A file that vanished after the listing
+    * (maintenance, deleteRecords) ends the read there: a short read the
+    * consumer retries, never rows past a gap. The rows equal those of
+    * LogOps.fetchWithByteBudget over the whole partition.
+    */
   override def fetch(tp: Topition, fetchOffset: Long, maxBytes: Long,
                      readCommitted: Boolean): DataFrame = {
+    ensureSwapRecovered(tp)
     val stage = offsetStage(tp)
-    val end = if (readCommitted) stage.lastStable else stage.highWatermark
-    val df0 = logDf(tp)
-    // P4 — control-batch filter: txn commit/abort markers occupy offsets
-    // but are never handed to consumers (reference record_fetch semantics)
-    val dataOnly =
-      if (df0.columns.contains("is_control")) df0.filter(!col("is_control"))
-      else df0
-    val ranged = dataOnly
-      .filter(col("offset") >= math.max(fetchOffset, logStart(tp)) &&
-        col("offset") < end)
-      // budget = key + value + per-record framing overhead: a compacted
-      // topic of tombstones (null values) must still consume budget, or
-      // maxBytes is ineffective and the facade's collect() is unbounded
-      .withColumn("val_len",
-        coalesce(octet_length(col("key").cast("binary")), lit(0)) +
-          coalesce(octet_length(col("value").cast("binary")), lit(0)) +
-          lit(16))
-    LogOps.fetchWithByteBudget(
-      ranged.withColumn("topic", lit(tp.topic))
-        .withColumn("partition", lit(tp.partition)),
-      fetchOffset, maxBytes).drop("running_bytes", "val_len")
+    val end = publishedEnd(tp,
+      if (readCommitted) stage.lastStable else stage.highWatermark)
+    val from = math.max(fetchOffset, stage.logStart)
+    // listed under the swap lock: never a maintenance swap half done
+    val files = if (from >= end) Nil else swapLock(tp).synchronized(batchFiles(tp))
+    val bases = files.map(baseOf)
+    var i = math.max(0, bases.lastIndexWhere(_ <= from))
+    val read =
+      if (bases.lift(i).exists(_ < from))
+        parquetReader(Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("offset", from)))
+      else wholeFiles
+    val out = Vector.newBuilder[Row]
+    var used = 0L
+    var done = false
+    while (!done && i < files.length && bases(i) < end) {
+      val found = readBatch(files(i), read) { rows =>
+        while (!done && rows.hasNext) {
+          val r = rows.next()
+          val offset = r.getLong(offsetCol)
+          if (offset >= end || used >= maxBytes) done = true
+          // control markers occupy offsets but are never handed out
+          else if (offset >= from && !(r.get(controlCol) == true)) {
+            used += 16 + bytesAt(r, keyCol) + bytesAt(r, valueCol)
+            out += Row.fromSeq(tp.topic +: tp.partition +: r.toSeq)
+          }
+        }
+      }
+      if (!found) done = true
+      i += 1
+    }
+    spark.createDataFrame(out.result().asJava, fetchSchema)
   }
+
+  private def bytesAt(r: Row, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getAs[Array[Byte]](i).length
+
+  private def baseOf(batch: java.nio.file.Path): Long =
+    batch.getFileName.toString.stripSuffix(".parquet").toLong
 
   // ---------------------------------------------------------------- offsets
 
@@ -642,11 +796,8 @@ final class ParquetStorage(spark: SparkSession, root: String,
   override def deleteRecords(tp: Topition, beforeOffset: Long): Long = {
     ensureSwapRecovered(tp)
     val cut = math.min(beforeOffset, offsetStage(tp).highWatermark)
-    import scala.jdk.CollectionConverters._
-    val files = listDir(Paths.get(partDir(tp))).iterator
-      .filter(p => p.getFileName.toString.matches("\\d{20}\\.parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-    val bases = files.map(_.getFileName.toString.stripSuffix(".parquet").toLong)
+    val files = batchFiles(tp)
+    val bases = files.map(baseOf)
     files.zip(bases).zipWithIndex.foreach { case ((f, _), i) =>
       val end = if (i + 1 < bases.length) bases(i + 1)
                 else offsetStage(tp).highWatermark
@@ -784,7 +935,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
     val onDisk =
       if (!Files.isDirectory(dir)) Nil
       else {
-        import scala.jdk.CollectionConverters._
         // close the directory stream — the 1 Hz maintenance sweep calls
         // this; leaked streams are leaked file descriptors
         val s = Files.list(dir)
@@ -936,7 +1086,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
     val dir = Paths.get(s"$root/scram")
     if (!Files.isDirectory(dir)) Nil
     else {
-      import scala.jdk.CollectionConverters._
       listDir(dir).iterator
         .map(_.getFileName.toString)
         .filter(_.endsWith(".json"))
@@ -974,7 +1123,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
         val loaded =
           if (!Files.exists(aclFile)) Vector.empty[AclEntry]
           else try {
-            import scala.jdk.CollectionConverters._
             jsonMapper.readTree(Files.readString(aclFile)).elements().asScala
               .map { n =>
                 AclEntry(n.path("rt").asInt(), n.path("rn").asText(),
@@ -1084,7 +1232,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
   private def loadQuotas(): Map[(String, Option[String]), Map[String, Double]] =
     quotaCache.getOrElse(quotaLock.synchronized {
       quotaCache.getOrElse {
-        import scala.jdk.CollectionConverters._
         val loaded =
           if (!Files.exists(quotaFile))
             Map.empty[(String, Option[String]), Map[String, Double]]
@@ -1139,7 +1286,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
   override def logDir: String = root
 
   override def partitionSizeBytes(tp: Topition): Long = {
-    import scala.jdk.CollectionConverters._
     val dir = Paths.get(partDir(tp))
     if (!Files.isDirectory(dir)) return 0L
     val s = Files.walk(dir)
@@ -1167,7 +1313,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
 
   private def ensureProducersLoaded(): Unit =
     if (producersLoaded.compareAndSet(false, true)) {
-      import scala.jdk.CollectionConverters._
       val pf = Paths.get(s"$root/producers.json")
       if (Files.exists(pf)) {
         val node = jsonMapper.readTree(Files.readString(pf))
@@ -1399,29 +1544,28 @@ final class ParquetStorage(spark: SparkSession, root: String,
   private def writeControlMarker(tp: Topition, producerId: Long,
                                  commit: Boolean): Unit = {
     val schema = logDf(tp).schema
-    val offset = reserveOffsets(tp, 1)
-    val vals: Array[Any] = schema.fields.map { f =>
-      f.name match {
-        case "offset" => offset
-        case "topic" => tp.topic
-        case "partition" => tp.partition
-        case "timestamp" => new java.sql.Timestamp(clock())
-        case "producer_id" => producerId
-        case "producer_epoch" => currentEpochs.getOrElse(producerId, 0)
-        case "base_sequence" => -1
-        case "is_control" => true
-        case "control_type" => if (commit) "commit" else "abort"
-        case _ => null
-      }
+    withReserved(Seq(tp -> 1L)) { reserved =>
+      val offset = reserved.head
+      val row = Row.fromSeq(schema.fields.toIndexedSeq.map { f =>
+        f.name match {
+          case "offset" => offset
+          case "topic" => tp.topic
+          case "partition" => tp.partition
+          case "timestamp" => new java.sql.Timestamp(clock())
+          case "producer_id" => producerId
+          case "producer_epoch" => currentEpochs.getOrElse(producerId, 0)
+          case "base_sequence" => -1
+          case "is_control" => true
+          case "control_type" => if (commit) "commit" else "abort"
+          case _ => null
+        }
+      })
+      val tmpDir = f"${partDir(tp)}/.tmp_$offset%020d"
+      spark.createDataFrame(java.util.Collections.singletonList(row), schema)
+        .coalesce(1).write.mode("overwrite").parquet(tmpDir)
+      Files.move(Paths.get(tmpDir), Paths.get(f"${partDir(tp)}/$offset%020d.parquet"),
+        StandardCopyOption.ATOMIC_MOVE)
     }
-    val row: org.apache.spark.sql.Row =
-      org.apache.spark.sql.Row.fromSeq(vals.toIndexedSeq)
-    val df = spark.createDataFrame(
-      java.util.Collections.singletonList(row), schema)
-    val tmpDir = f"${partDir(tp)}/.tmp_$offset%020d"
-    df.coalesce(1).write.mode("overwrite").parquet(tmpDir)
-    Files.move(Paths.get(tmpDir), Paths.get(f"${partDir(tp)}/$offset%020d.parquet"),
-      StandardCopyOption.ATOMIC_MOVE)
     ()
   }
 
@@ -1598,7 +1742,6 @@ final class ParquetStorage(spark: SparkSession, root: String,
 
   private def deleteRecursive(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
       walkAll(p).reverse.foreach(Files.delete)
     }
 
@@ -1619,7 +1762,12 @@ final class ParquetStorage(spark: SparkSession, root: String,
     // listing the live file set — stale staged segments must never be
     // mistaken for garbage while a commit marker says they are the data
     allTps.foreach { tp => swapRecovered.put(tp, true); recoverMaintainSwap(tp) }
-    val filesByTp = allTps.map(tp => tp -> batchFiles(tp)).filter(_._2.nonEmpty)
+    // only the published prefix is rewritten: a batch still in flight
+    // must not land inside a rewritten segment's range
+    val bounds = allTps.map(tp => tp -> publishedEnd(tp,
+      offsetStage(tp).highWatermark)).toMap
+    val filesByTp = allTps.map(tp => tp -> batchFiles(tp).filter(baseOf(_) < bounds(tp)))
+      .filter(_._2.nonEmpty)
     if (filesByTp.isEmpty) return
     // ignoreMissingFiles: a concurrent DeleteRecords can remove a listed
     // batch file before the rewrite job scans it — the same race logDf
@@ -1672,8 +1820,7 @@ final class ParquetStorage(spark: SparkSession, root: String,
       // log-start so listEarliestOffset never names a deleted offset
       if (policy.contains("delete") && retentionMs.nonEmpty)
         advanceLogStart(tp,
-          if (segs.nonEmpty) segs.map(_._3).min
-          else offsetStage(tp).highWatermark)
+          if (segs.nonEmpty) segs.map(_._3).min else bounds(tp))
     }
     deleteRecursive(tmpRoot)
   }

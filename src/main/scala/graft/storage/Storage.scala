@@ -39,7 +39,9 @@ trait Storage {
 
   // -- produce / fetch (reference lib.rs:1370-1388)
   /** Append a batch of records to one topition; returns the assigned base
-    * offset, or an ErrorCode on validation/sequence failure.
+    * offset, or an ErrorCode on validation/sequence failure, or
+    * KAFKA_STORAGE_ERROR when a failure left nothing stored. It throws
+    * only when the outcome is unknown.
     */
   def produce(tp: Topition, batch: DataFrame,
               producerId: Long = -1L, producerEpoch: Int = -1,
@@ -56,6 +58,13 @@ trait Storage {
   /** Records in [fetchOffset, visibility end) up to maxBytes, where the
     * end is the high watermark (read_uncommitted) or last stable offset
     * (read_committed) — reference `dynostore.rs:1037-1043`.
+    *
+    * Order: rows come back in offset order, so callers need not sort,
+    * and never past an offset that is reserved but not yet readable.
+    * Cost: follows the bytes returned, not the partition's size or age —
+    * a bounded fetch reads from the row group that holds its start up to
+    * the first row past its budget, on the calling thread, and runs no
+    * Spark job. An unbounded maxBytes reads the whole range into memory.
     */
   def fetch(tp: Topition, fetchOffset: Long, maxBytes: Long,
             readCommitted: Boolean = false): DataFrame

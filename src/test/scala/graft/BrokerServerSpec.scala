@@ -5,7 +5,7 @@ import java.net.Socket
 import java.nio.ByteBuffer
 import graft.facade.{BrokerServer, WireProtocol => W}
 import graft.functions.RecordBatchCodec
-import graft.storage.ParquetStorage
+import graft.storage.{ParquetStorage, Storage}
 
 /** Wire round-trip through a real TCP socket: frame → route → storage →
   * frame (the S1/S2 path; mirrors the shape of the reference's
@@ -2316,6 +2316,127 @@ class BrokerServerSpec extends SparkSpec {
         assert(all.map(_._1).contains("ld"), s"v$v null form")
       }
       sock.close()
+    } finally broker.close()
+  }
+
+  /** A storage whose `failing` method throws, as a disk or Spark failure
+    * inside storage would, before the call reaches `inner` or, with
+    * `afterInner`, once it has; every other call goes to `inner`.
+    */
+  private def failingStorage(inner: Storage, failing: String,
+                             afterInner: Boolean = false): Storage =
+    java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[Storage]),
+      (_: AnyRef, m: java.lang.reflect.Method, args: Array[AnyRef]) => {
+        def call() =
+          try m.invoke(inner, (if (args == null) Array.empty[AnyRef] else args): _*)
+          catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+        if (m.getName != failing) call()
+        else {
+          if (afterInner) call()
+          throw new IllegalStateException(s"injected $failing failure")
+        }
+      })
+      .asInstanceOf[Storage]
+
+  private def oneRecordBatch: Array[Byte] = RecordBatchCodec.encode(
+    RecordBatchCodec.Batch(0L, 0, 0, 1704067200000L, 1704067200000L,
+      -1L, -1, -1, Seq(RecordBatchCodec.Record(0, 0L, "k".getBytes, "v".getBytes, Nil))))
+
+  test("produce answers 56 when nothing was stored, -1 when the outcome is unknown, 87 for a bad batch") {
+    val root = java.nio.file.Files.createTempDirectory("graft-broker-sf").toString
+    val storage = new ParquetStorage(spark, root)
+    storage.createTopic("sf", 1)
+    val tp = graft.model.Model.Topition("sf", 0)
+    def produceOn(st: Storage, records: Array[Byte]): Short = {
+      val broker = new BrokerServer(st)
+      try {
+        val sock = new Socket("127.0.0.1", broker.boundPort)
+        try W.readProduceResponse(request(sock, 0, 3, 1) { b =>
+          W.writeProduce(b, W.ProduceRequest(1, 30000, Seq(
+            W.ProduceTopic("sf", Seq(W.ProducePartition(0, records))))))
+        }, 3)._1.head._2.head._2
+        finally sock.close()
+      } finally broker.close()
+    }
+    def stored() = storage.fetch(tp, 0, Long.MaxValue).collect()
+      .map(_.getAs[Long]("offset")).toSeq
+    // the batch file cannot be renamed into place: nothing is stored, so
+    // the client may retry (KAFKA_STORAGE_ERROR)
+    val blocker = java.nio.file.Paths.get(storage.fetchLogDir(tp),
+      "0" * 20 + ".parquet", "in-the-way")
+    java.nio.file.Files.createDirectories(blocker)
+    assert(produceOn(storage, oneRecordBatch) === 56)
+    java.nio.file.Files.delete(blocker)
+    java.nio.file.Files.delete(blocker.getParent)
+    assert(stored() === Nil)
+    // a storage that throws may have stored the batch, as here: a retry
+    // could append it twice, so the answer is one clients do not retry
+    assert(produceOn(failingStorage(storage, "produce"), oneRecordBatch) === -1)
+    assert(produceOn(failingStorage(storage, "produce", afterInner = true),
+      oneRecordBatch) === -1)
+    assert(stored() === Seq(1L))
+    // undecodable bytes are the client's fault, answered before storage
+    assert(produceOn(storage, Array[Byte](1, 2, 3)) === 87)
+  }
+
+  test("a storage failure in fetch answers KAFKA_STORAGE_ERROR (56) and keeps the connection") {
+    val root = java.nio.file.Files.createTempDirectory("graft-broker-ff").toString
+    val storage = new ParquetStorage(spark, root)
+    storage.createTopic("ff", 1)
+    import spark.implicits._
+    storage.produce(graft.model.Model.Topition("ff", 0),
+      Seq((new java.sql.Timestamp(1000L), "k", "v")).toDF("timestamp", "key", "value"))
+    val broker = new BrokerServer(failingStorage(storage, "fetch"))
+    try {
+      val sock = new Socket("127.0.0.1", broker.boundPort)
+      val parts = W.readFetchResponseClassic(request(sock, 1, 4, 1) { b =>
+        W.writeFetch(b, W.FetchRequest(0, 1, 1 << 20, 0, Seq(
+          W.FetchTopic("ff", Seq(W.FetchPartition(0, 0L, 1 << 20))))))
+      }, 4)
+      val part = parts.head._2.head
+      assert(part.error === 56)
+      assert(Option(part.records).forall(_.isEmpty))
+      // the same connection still serves requests
+      val av = request(sock, 18, 0, 2)(_ => ())
+      assert(av.getShort === 0)
+      sock.close()
+    } finally broker.close()
+  }
+
+  test("a 2 KiB wire fetch of an aged partition's tail runs no Spark job") {
+    import graft.model.Model.{ConfigKey, Topition}
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-broker-aged").toString
+    val storage = new ParquetStorage(spark, root)
+    storage.createTopic("aged", 1, Map(ConfigKey.CleanupPolicy -> "compact",
+      ConfigKey.SegmentRows -> "1"))
+    val tp = Topition("aged", 0)
+    // 120 distinct 1 KiB records, split by maintenance into one file each
+    val kib = "x" * 1024
+    storage.produce(tp, (0 until 120).map(i =>
+      (new java.sql.Timestamp(1704067200000L + i), s"k$i", kib))
+      .toDF("timestamp", "key", "value"))
+    storage.maintain()
+    storage.abortedTxns(tp, 0, Long.MaxValue) // the one-time recovery scan
+    val broker = new BrokerServer(storage)
+    try {
+      val sock = new Socket("127.0.0.1", broker.boundPort)
+      try {
+        val jobs = jobsDuring {
+          val parts = W.readFetchResponseClassic(request(sock, 1, 4, 1) { b =>
+            W.writeFetch(b, W.FetchRequest(0, 1, 1 << 20, 0, Seq(
+              W.FetchTopic("aged", Seq(W.FetchPartition(0, 118L, 2048))))))
+          }, 4)
+          val part = parts.head._2.head
+          assert(part.error === 0)
+          val batch = RecordBatchCodec.decode(part.records)
+          assert(batch.records.map(r => batch.baseOffset + r.offsetDelta) ===
+            Seq(118L, 119L))
+          assert(batch.records.forall(r => new String(r.value) == kib))
+        }
+        assert(jobs === 0)
+      } finally sock.close()
     } finally broker.close()
   }
 }

@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 import graft.model.Model._
+import graft.operators.LogOps
 import graft.storage.ParquetStorage
 import graft.schema.SchemaRegistry
 
@@ -9,7 +15,7 @@ import graft.schema.SchemaRegistry
   * (the `nisshi-storage/tests` suite; idempotence cases
   * `service/produce.rs:356-760`).
   */
-class StorageSpec extends SparkSpec {
+class StorageSpec extends SparkSpec with PropSupport {
   import spark.implicits._
 
   private def newStorage(withRegistry: Boolean = false): (ParquetStorage, String) = {
@@ -701,4 +707,219 @@ class StorageSpec extends SparkSpec {
       assert(st2.partitionCount("grow") === 18)
     } finally pool.shutdownNow()
   }
+
+  private def batchDirs(st: ParquetStorage, tp: Topition): Seq[Path] = {
+    val s = Files.list(Paths.get(st.fetchLogDir(tp)))
+    try s.iterator().asScala.filter(_.getFileName.toString.matches("\\d{20}\\.parquet"))
+      .toSeq.sortBy(_.getFileName.toString)
+    finally s.close()
+  }
+
+  private def baseOf(p: Path): Long =
+    p.getFileName.toString.stripSuffix(".parquet").toLong
+
+  /** The plan fetch ran before it read batch files itself: every batch
+    * file through spark.read, then the byte-budget window over all of
+    * them.
+    */
+  private def fetchOracle(st: ParquetStorage, tp: Topition, fetchOffset: Long,
+                          maxBytes: Long, readCommitted: Boolean): DataFrame = {
+    val stage = st.offsetStage(tp)
+    val end = if (readCommitted) stage.lastStable else stage.highWatermark
+    val ranged = spark.read.parquet(batchDirs(st, tp).map(_.toString): _*)
+      .filter(!col("is_control"))
+      .filter(col("offset") >= math.max(fetchOffset, stage.logStart) &&
+        col("offset") < end)
+      .withColumn("val_len", coalesce(octet_length(col("key")), lit(0)) +
+        coalesce(octet_length(col("value")), lit(0)) + lit(16))
+    LogOps.fetchWithByteBudget(ranged.withColumn("topic", lit(tp.topic))
+      .withColumn("partition", lit(tp.partition)), fetchOffset, maxBytes)
+      .drop("running_bytes", "val_len")
+  }
+
+  // byte arrays compare by content
+  private def plain(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case m: scala.collection.Map[_, _] => m.map { case (k, x) => k -> plain(x) }.toMap
+    case x => x
+  }
+
+  test("fetch returns the rows of the whole-partition byte-budget plan") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1, Map(ConfigKey.CleanupPolicy -> "compact",
+      ConfigKey.SegmentRows -> "3"))
+    // microsecond timestamps: decoding must be exact, not just ordered
+    def recs(from: Int, kvs: (String, String)*) =
+      kvs.zipWithIndex.map { case ((k, v), i) =>
+        (java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+          1704067200L + from + i, 123456000L + (from + i) * 1000L)), k, v)
+      }.toDF("timestamp", "key", "value")
+    def txn(id: String, from: Int, n: Int, commit: Boolean): Unit = {
+      val (pid, epoch) = st.initProducer(id)
+      st.txnBegin(pid, tp)
+      assert(st.produce(tp, recs(from, (0 until n).map(i => s"$id-$i" -> s"v$i"): _*),
+        pid, epoch, 0).isRight)
+      assert(st.txnEnd(pid, commit) === ErrorCode.None)
+    }
+    assert(st.produce(tp, recs(0, "a" -> "v0", "b" -> "v1", "c" -> "v2",
+      "d" -> "v3", "e" -> "v4")) === Right(0L))                  // 0..4
+    Seq("a", "b", "f").zipWithIndex.foreach { case (k, i) =>
+      st.produce(tp, recs(5 + i, k -> s"w$i")) }                 // 5..7
+    st.produce(tp, recs(8, "c" -> null, "g" -> null))            // tombstones 8, 9
+    txn("tx-a", 10, 2, commit = true)                            // 10, 11 + marker 12
+    txn("tx-b", 13, 3, commit = false)                           // 13..15 + marker 16
+    st.maintain() // compaction drops 0..2; segments of 3 rows
+    st.produce(tp, recs(17, "h" -> "x", "i" -> "y"))             // 17, 18
+    val (open, epoch) = st.initProducer("tx-c")                  // open: 19, 20
+    st.txnBegin(open, tp)
+    st.produce(tp, recs(19, "j" -> "z", "k" -> "zz"), open, epoch, 0)
+    st.produce(tp, recs(21, "l" -> "last"))                      // 21
+    assert(st.deleteRecords(tp, 4) === 4L)
+    val stage = st.offsetStage(tp)
+    assert((stage.logStart, stage.lastStable, stage.highWatermark) === (4L, 19L, 22L))
+    assert(batchDirs(st, tp).size >= 6)
+
+    val gen = for {
+      offset <- Gen.choose(-1L, 23L)
+      maxBytes <- Gen.oneOf(Gen.choose(0L, 200L), Gen.const(Long.MaxValue))
+      committed <- Gen.oneOf(false, true)
+    } yield (offset, maxBytes, committed)
+    forAllGen(gen, cases = 40) { case (offset, maxBytes, committed) =>
+      val want = fetchOracle(st, tp, offset, maxBytes, committed)
+      val cols = want.columns.toSeq
+      val got = st.fetch(tp, offset, maxBytes, committed).select(cols.map(col): _*)
+        .collect().map(_.toSeq.map(plain)).toSeq
+      assert(got === want.orderBy("offset").collect().map(_.toSeq.map(plain)).toSeq)
+    }
+  }
+
+  test("fetch never returns records past a batch that is not yet published") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1, Map(ConfigKey.CleanupPolicy -> "compact"))
+    assert(st.produce(tp, batch(3)) === Right(0L))
+    // producer A's write job waits once A holds offset 3 (the watermark
+    // file says 4), so producer B's offset 4 is published first
+    val wm = Paths.get(st.fetchLogDir(tp), "watermark.json").toString
+    val hold = udf { (v: String) =>
+      if (Files.readString(Paths.get(wm)).contains("\"high\":4")) {
+        StorageSpec.aWriting.countDown()
+        StorageSpec.aMayPublish.await(60, TimeUnit.SECONDS)
+      }
+      v
+    }
+    val a = scala.concurrent.Future(
+      st.produce(tp, batch(1, 3).withColumn("value", hold(col("value")))))(
+      scala.concurrent.ExecutionContext.global)
+    assert(StorageSpec.aWriting.await(60, TimeUnit.SECONDS))
+    try {
+      assert(st.produce(tp, batch(1, 4)) === Right(4L))
+      assert(st.offsetStage(tp).highWatermark === 5L)
+      // offset 4 is in place but 3 is not: a consumer handed 4 would skip 3
+      assert(st.fetch(tp, 3, Long.MaxValue).count() === 0L)
+      assert(st.fetch(tp, 0, Long.MaxValue).collect().map(_.getAs[Long]("offset"))
+        .toSeq === Seq(0L, 1L, 2L))
+      // maintenance rewrites only the files below the unpublished base
+      st.maintain()
+      assert(batchDirs(st, tp).map(baseOf) === Seq(0L, 4L))
+    } finally StorageSpec.aMayPublish.countDown()
+    assert(scala.concurrent.Await.result(a,
+      scala.concurrent.duration.Duration(60, "s")) === Right(3L))
+    assert(st.fetch(tp, 0, Long.MaxValue).collect().map(_.getAs[Long]("offset"))
+      .toSeq === (0L to 4L))
+    assert(batchDirs(st, tp).map(baseOf) === Seq(0L, 3L, 4L))
+  }
+
+  test("a 2 KiB fetch of an aged partition opens at most 3 batch files and runs no Spark job") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1, Map(ConfigKey.CleanupPolicy -> "compact",
+      ConfigKey.SegmentRows -> "1"))
+    // 120 distinct 1 KiB records, split by maintenance into one file each
+    val kib = "x" * 1024
+    assert(st.produce(tp, (0 until 120).map(i =>
+      (new java.sql.Timestamp(1704067200000L + i), s"k$i", kib))
+      .toDF("timestamp", "key", "value")) === Right(0L))
+    st.abortedTxns(tp, 0, Long.MaxValue) // the facade's one-time recovery scan
+    st.maintain()
+    val dirs = batchDirs(st, tp)
+    assert(dirs.map(baseOf) === (0L until 120L))
+    // every other batch file is overwritten with garbage: a fetch that
+    // opened one would fail
+    val needed = Set(60L, 61L, 62L, 118L, 119L)
+    dirs.filterNot(d => needed(baseOf(d))).foreach { d =>
+      val s = Files.list(d)
+      try s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .foreach(Files.writeString(_, "not parquet"))
+      finally s.close()
+    }
+    def offsets(df: DataFrame) = df.collect().map(_.getAs[Long]("offset")).toSeq
+    val jobs = jobsDuring {
+      // 1043 + 1043 bytes reach the budget: file 62 is read, its row dropped
+      assert(offsets(st.fetch(tp, 60, 2048)) === Seq(60L, 61L))
+      assert(offsets(st.fetch(tp, 118, 2048)) === Seq(118L, 119L))
+      assert(offsets(st.fetch(tp, 119, 2048)) === Seq(119L))
+    }
+    assert(jobs === 0)
+  }
+
+  test("a fetch ends before a batch directory whose files are being deleted") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1)
+    (0 until 3).foreach(i => assert(st.produce(tp, batch(1, i)) === Right(i.toLong)))
+    // a delete removes the part files before their directory: a fetch
+    // listing the directory in between must not read on past it
+    val s = Files.list(batchDirs(st, tp)(1))
+    try s.iterator().asScala.toList.foreach(Files.delete) finally s.close()
+    assert(st.fetch(tp, 0, Long.MaxValue).collect().map(_.getAs[Long]("offset"))
+      .toSeq === Seq(0L))
+  }
+
+  test("a tail fetch of a large maintained segment skips its row groups below the start") {
+    val (st, _) = newStorage()
+    st.createTopic("t1", 1, Map(ConfigKey.CleanupPolicy -> "compact"))
+    val rnd = new scala.util.Random(7)
+    assert(st.produce(tp, (0 until 4000).map(i =>
+      (new java.sql.Timestamp(1704067200000L + i), s"k$i",
+        rnd.alphanumeric.take(256).mkString))
+      .toDF("timestamp", "key", "value")) === Right(0L))
+    // small row groups, so the one segment maintenance writes holds many
+    spark.conf.set("parquet.block.size", "16384")
+    try st.maintain() finally spark.conf.unset("parquet.block.size")
+    val segment = batchDirs(st, tp)
+    assert(segment.map(baseOf) === Seq(0L))
+    val parts = { val s = Files.list(segment.head)
+      try s.iterator().asScala.toList finally s.close() }
+    val part = parts.filter(_.getFileName.toString.startsWith("part-")) match {
+      case Seq(p) => p
+      case ps => fail(s"one part file expected, found $ps")
+    }
+    // every row group wholly below offset 3500 is zeroed (and the
+    // checksum file dropped): a fetch that read one would fail
+    val footer = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.toUri), new org.apache.hadoop.conf.Configuration()))
+      try r.getFooter finally r.close()
+    }
+    val below = footer.getBlocks.asScala.filter(_.getColumns.asScala
+      .find(_.getPath.toDotString == "offset").get.getStatistics.genericGetMax
+      .asInstanceOf[java.lang.Long] < 3500L)
+    assert(below.size >= 10, s"${footer.getBlocks.size} row groups")
+    parts.filter(_.getFileName.toString.endsWith(".crc")).foreach(Files.delete)
+    val ch = java.nio.channels.FileChannel.open(part, java.nio.file.StandardOpenOption.WRITE)
+    try below.foreach(b =>
+      ch.write(java.nio.ByteBuffer.allocate(b.getCompressedSize.toInt), b.getStartingPos))
+    finally ch.close()
+    def offsets(df: DataFrame) = df.collect().map(_.getAs[Long]("offset")).toSeq
+    intercept[Exception](offsets(st.fetch(tp, 0, 2048)))
+    // 2048 / (256 + 5 + 16) rounds up to 8 rows
+    assert(offsets(st.fetch(tp, 3500, 2048)) === (3500L to 3507L))
+    assert(offsets(st.fetch(tp, 3990, Long.MaxValue)) === (3990L until 4000L))
+  }
+}
+
+object StorageSpec {
+  // the in-flight test's two producers, on a Spark task thread and the
+  // test thread
+  val aWriting = new CountDownLatch(1)
+  val aMayPublish = new CountDownLatch(1)
 }
